@@ -192,8 +192,10 @@ class SparkEngine:
         self.indexes: dict[str, dict] = {}  # fq index -> {table, cols}
         self.cursors: dict[str, dict] = {}  # name -> {sub, rel, pos}
         self.udf_defs: dict[str, list] = {}  # name -> [rettype, body]
-        # fq table -> (fs location, partition cols)
-        self._locations: dict[str, tuple[str, list[str]]] = {}
+        # fq table -> (fs location, partition cols, [(column, type)])
+        self._locations: dict[
+            str, tuple[str, list[str], list[tuple[str, str]]]
+        ] = {}
         # Per-changelog epoch manifest: the set of REGISTERED epoch
         # partitions, maintained at every engine commit and validated
         # per use by ONE os.stat of the on-disk commit marker — the
@@ -310,15 +312,40 @@ class SparkEngine:
     def _clear_stale_location(self, fq: str) -> None:
         """The session catalog is in-memory but managed-table data dirs
         persist on disk; a table absent from the catalog whose location
-        survives (prior process) must be cleared before re-creating."""
+        survives (prior process) must be cleared before re-creating,
+        together with any direct-refresh generation dirs it left."""
         if self.spark.catalog.tableExists(fq):
             return
-        db, tbl = _split_fq(fq)
-        wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        wh = re.sub(r"^file:", "", wh)
-        path = os.path.join(wh, f"{db}.db", tbl)
-        if os.path.exists(path):
-            shutil.rmtree(path, ignore_errors=True)
+        self._invalidate_location(fq)
+        self._remove_generations(fq)
+
+    def _remove_generations(self, fq: str, keep: tuple[str, ...] = ()) -> None:
+        """Delete the on-disk result generations of ``fq`` — its
+        managed dir and every ``__rwgen_<epoch>`` sibling the direct
+        MV refresh published — except the dirs in ``keep``. They sit
+        next to the cached location when there is one (an MV result
+        table's), else next to the warehouse path. Called with no
+        ``keep`` only once ``fq`` points at none of them (after a
+        DROP or RENAME, or before a CREATE)."""
+        meta = self._locations.get(fq)
+        if meta is not None:
+            loc = meta[0]
+        else:
+            db, tbl = _split_fq(fq)
+            wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+            loc = os.path.join(re.sub(r"^file:", "", wh), f"{db}.db", tbl)
+        base = re.sub(r"__rwgen_\d+$", "", loc.rstrip("/"))
+        parent, name = os.path.split(base)
+        gen = re.compile(rf"{re.escape(name)}(__rwgen_\d+)?")
+        kept = {k.rstrip("/") for k in keep}
+        try:
+            entries = os.listdir(parent)
+        except OSError:
+            return
+        for e in entries:
+            path = os.path.join(parent, e)
+            if gen.fullmatch(e) and path not in kept:
+                shutil.rmtree(path, ignore_errors=True)
 
     # -- DDL ---------------------------------------------------------------
 
@@ -413,8 +440,7 @@ class SparkEngine:
         fq = self.qualify(name, schema_name)
         self.watermarks.pop(fq, None)
         self.table_props.pop(fq, None)
-        self._locations.pop(fq, None)
-        self._locations.pop(self.changelog_name(fq), None)
+        self._invalidate_location(fq, self.changelog_name(fq))
         if fq in self.upsert_meta:
             self.spark.sql(f"DROP VIEW IF EXISTS {fq}")
             self.spark.sql(f"DROP TABLE IF EXISTS {self.log_name(fq)}")
@@ -425,7 +451,7 @@ class SparkEngine:
 
     def _ensure_changelog(self, fq: str) -> None:
         cl = self.changelog_name(fq)
-        if not self.spark.catalog.tableExists(cl):
+        if not self._known_table(cl):
             self._clear_stale_location(cl)
             base = self.spark.table(fq)
             empty = base.withColumn("op", F.lit("x")).withColumn(
@@ -448,10 +474,11 @@ class SparkEngine:
     # Spark SQL type -> pyarrow type for the direct row-group ingest
     # path (None-able map: anything absent falls back to Spark writes).
     @staticmethod
-    def _arrow_type(dt: "T.DataType"):
+    def _arrow_type(dt: "T.DataType | str"):
         import pyarrow as pa
 
-        s = dt.simpleString()
+        # a str is a catalog type name, as DESC FORMATTED prints it
+        s = dt if isinstance(dt, str) else dt.simpleString()
         scalar = {
             "bigint": pa.int64(), "int": pa.int32(),
             "smallint": pa.int16(), "tinyint": pa.int8(),
@@ -472,20 +499,18 @@ class SparkEngine:
 
     def _table_meta(self, fq: str) -> tuple[str | None, list[str]]:
         """(filesystem location, partition columns) of a catalog table,
-        cached — DESC FORMATTED is a driver-side catalog lookup but
-        still ~10 ms, and the direct ingest/cursor paths consult this
-        per call. Invalidated on DROP/RENAME/rewrite."""
-        meta = self._locations.get(fq)
+        cached together with its columns — DESC FORMATTED is a
+        driver-side catalog lookup but still ~10 ms, and the direct
+        ingest, refresh and cursor paths consult this per call. The
+        direct MV refresh records each generation it publishes here;
+        every other statement that moves, drops or reshapes a table
+        goes through ``_invalidate_location``, the one invalidation
+        helper (the Spark refresh paths reach it via
+        ``_swap_in_stage``)."""
+        meta = self._cached_meta(fq)
         if meta is not None:
-            # one syscall guards against any missed invalidation: a
-            # cached location whose dir is gone (table dir moved by a
-            # rewrite) must re-resolve, never be served stale — the
-            # direct ingest path would otherwise write into an
-            # orphaned directory no reader lists.
-            if os.path.isdir(meta[0]):
-                return meta
-            self._locations.pop(fq, None)
-        loc, parts, mode = None, [], None
+            return meta[0], meta[1]
+        loc, parts, cols, mode = None, [], [], None
         for r in self.spark.sql(f"DESC FORMATTED {fq}").collect():
             cn = (r.col_name or "").strip()
             if cn == "# Partition Information":
@@ -494,7 +519,10 @@ class SparkEngine:
             if cn == "# Detailed Table Information":
                 mode = "detail"
                 continue
-            if mode == "part":
+            if mode is None:
+                if cn and not cn.startswith("#"):
+                    cols.append((cn, r.data_type))
+            elif mode == "part":
                 if cn in ("", "# col_name") or cn.startswith("#"):
                     continue
                 parts.append(cn)
@@ -502,8 +530,55 @@ class SparkEngine:
                 loc = re.sub(r"^file:", "", r.data_type)
         if loc is None or not os.path.isdir(loc):
             return None, parts  # don't cache a miss
-        self._locations[fq] = (loc, parts)
+        self._locations[fq] = (loc, parts, cols)
         return loc, parts
+
+    def _cached_meta(self, fq: str):
+        meta = self._locations.get(fq)
+        if meta is None:
+            return None
+        # one syscall guards against any missed invalidation: a cached
+        # location whose dir is gone (table dir moved by a rewrite or
+        # dropped behind the engine's back) must re-resolve, never be
+        # served stale — the direct ingest path would otherwise write
+        # into an orphaned directory no reader lists.
+        if os.path.isdir(meta[0]):
+            return meta
+        self._locations.pop(fq, None)
+        return None
+
+    def _table_columns(self, fq: str) -> list[tuple[str, str]] | None:
+        """[(column, catalog type name)] in the table's physical order,
+        from the same cached lookup as its location."""
+        if self._table_meta(fq)[0] is None:
+            return None
+        meta = self._locations.get(fq)
+        return None if meta is None else meta[2]
+
+    def _known_table(self, fq: str) -> bool:
+        # a valid cached location proves the table exists: every drop
+        # goes through _invalidate_location
+        return (
+            self._cached_meta(fq) is not None
+            or self.spark.catalog.tableExists(fq)
+        )
+
+    def _invalidate_location(self, *fqs: str) -> None:
+        for fq in fqs:
+            self._locations.pop(fq, None)
+
+    def _swap_in_stage(self, fq: str, stage: str) -> None:
+        """Replace MV result table ``fq`` by the staged table ``stage``
+        (the Spark refresh paths' publication): DROP, then RENAME into
+        the managed path. Every generation the direct refresh left
+        behind goes first — a retained managed dir would block the
+        RENAME — and the cached location is invalidated."""
+        self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
+        self._remove_generations(fq)
+        self._invalidate_location(fq)
+        self.spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
+        # drop any cached file listing of the old table
+        self.spark.catalog.refreshTable(fq)
 
     def _table_location(self, fq: str) -> str | None:
         return self._table_meta(fq)[0]
@@ -669,7 +744,7 @@ class SparkEngine:
         import pyarrow.parquet as pq
 
         fq = self.qualify(name, schema_name)
-        if fq in self.upsert_meta or not self.spark.catalog.tableExists(fq):
+        if fq in self.upsert_meta or not self._known_table(fq):
             return None
         # Bucketed tables store bucket ids IN the filename; a raw
         # rwfast-*.parquet in a CLUSTERED BY dir breaks the bucketed
@@ -696,15 +771,16 @@ class SparkEngine:
         self._ensure_changelog(fq)
         cl = self.changelog_name(fq)
         cl_loc, cl_parts = self._table_meta(cl)
+        cl_fields = self._table_columns(cl)
         # legacy-unpartitioned changelogs (pre-round-8 ALTER rewrites)
         # can't take a partition-dir append — Spark path handles them
-        if cl_loc is None or cl_parts != ["rw_timestamp"]:
+        if cl_fields is None or cl_parts != ["rw_timestamp"]:
             return None
         # align to the changelog's physical column order (diverges
         # after ALTER ADD COLUMN); rw_timestamp is the partition dir
         n = len(rows)
         cl_cols: dict[str, "pa.Array"] = {}
-        for c in self.spark.table(cl).columns:
+        for c, ty in cl_fields:
             if c == "rw_timestamp":
                 continue
             if c == "op":
@@ -712,7 +788,7 @@ class SparkEngine:
             elif c in cols:
                 cl_cols[c] = cols[c]
             else:
-                ct = self._arrow_type(self.spark.table(cl).schema[c].dataType)
+                ct = self._arrow_type(ty)
                 if ct is None:
                     return None
                 cl_cols[c] = pa.nulls(n, type=ct)
@@ -740,8 +816,9 @@ class SparkEngine:
             self._touch_epoch_marker(cl, epoch)
             commit_file(pa.table(cols), loc,
                         f"rwfast-{epoch}-{uuid.uuid4().hex}.parquet")
+            # the base file landed without a catalog statement: drop
+            # cached listings of fq (ADD PARTITION already refreshed cl)
             self.spark.catalog.refreshTable(fq)
-            self.spark.catalog.refreshTable(cl)
         return epoch
 
     def insert_df(self, name: str, df: DataFrame, schema_name: str | None = None) -> int:
@@ -1298,7 +1375,7 @@ class SparkEngine:
         w.saveAsTable(stage)
         self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
         self.spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-        self._locations.pop(fq, None)  # layout may have changed
+        self._invalidate_location(fq)  # layout may have changed
         if partition_by:
             # RENAME on a partitioned managed table drops partition
             # metadata — recover or the table reads as empty
@@ -1324,6 +1401,7 @@ class SparkEngine:
         if self.spark.catalog.tableExists(cl):
             with self._lock:
                 self.spark.sql(f"ALTER TABLE {cl} ADD COLUMNS (`{col}` {spark_t})")
+        self._invalidate_location(fq, cl)  # cached columns changed
         self.refresh_info_schema()
 
     def drop_column(self, name: str, col: str,
@@ -1363,9 +1441,8 @@ class SparkEngine:
         # a managed-table rename MOVES the data directory: drop every
         # cached location for both names or the direct-ingest path
         # would land files in the moved-away dir
-        for stale in (fq, new_fq, self.changelog_name(fq),
-                      self.changelog_name(new_fq)):
-            self._locations.pop(stale, None)
+        self._invalidate_location(fq, new_fq, self.changelog_name(fq),
+                                  self.changelog_name(new_fq))
         self.spark.sql(f"ALTER TABLE {fq} RENAME TO {new_fq}")
         cl, new_cl = self.changelog_name(fq), self.changelog_name(new_fq)
         if self.spark.catalog.tableExists(cl):
@@ -1421,6 +1498,9 @@ class SparkEngine:
                     pass
                 if cl in self.vacuum_floor:
                     self.vacuum_floor[new_cl] = self.vacuum_floor.pop(cl)
+            # the RENAME moved only the current generation
+            self._remove_generations(fq)
+            self._invalidate_location(fq, new_fq, cl, new_cl)
             state = self.mvs.pop(fq)
             state.fq = new_fq
             self.mvs[new_fq] = state
@@ -3212,7 +3292,25 @@ class SparkEngine:
         the MV would otherwise take: UpdateDelete/UpdateInsert pairs
         when the group keys are known, Delete+Insert bag-diff ops
         otherwise (global aggregates) — so a fallback mid-stream never
-        changes what subscribers observe."""
+        changes what subscribers observe.
+
+        Statement budget: a refresh that publishes issues two catalog
+        statements, ``ALTER TABLE <changelog> ADD PARTITION`` and
+        ``ALTER TABLE <mv> SET LOCATION``; each refreshes its own
+        table's cached relation, so no ``refreshTable`` follows. A
+        refresh with no visible change issues none. Locations and
+        columns come from the ``_table_meta`` cache, and the MV's entry
+        is trusted because this path records each generation it
+        publishes there. The SET LOCATION capability probe runs once
+        per armed plan dict (re-arm builds a new one): whether the
+        catalog accepts the statement is a property of the catalog,
+        not of the refresh, and probing before the first mutation
+        still lets a refusing catalog fall back cleanly.
+
+        Retirement: publishing generation N+1 keeps N and deletes
+        N−1 (and any older one a dead process left), so a query
+        planned against N before this swap still reads it. ``drop_mv``, ``rename_mv`` and the Spark
+        paths' ``_swap_in_stage`` remove every retained generation."""
         import uuid
 
         import pyarrow as pa
@@ -3262,14 +3360,11 @@ class SparkEngine:
                 files.extend(fs)
             if total > self.DIRECT_MAX_DELTA_ROWS:
                 return False
-            # NEVER trust the location cache for the MV itself: the
-            # Spark refresh paths swap fq via DROP+RENAME (canonical
-            # location) and this path via SET LOCATION (generation
-            # dirs) — interleaving them with a stale cache would read
-            # an empty deleted dir and silently rebuild from nothing.
-            self._locations.pop(fq, None)
+            # Trusted: this path records each generation it publishes,
+            # and every other move of fq invalidates the entry.
             loc_mv, parts_mv = self._table_meta(fq)
-            if loc_mv is None or parts_mv:
+            mv_fields = self._table_columns(fq)
+            if mv_fields is None or parts_mv:
                 return False
             mv_files = self._direct_part_files(loc_mv)
             if (
@@ -3280,7 +3375,8 @@ class SparkEngine:
             cl = self.changelog_name(fq)
             self._ensure_changelog(fq)
             cl_loc, cl_parts = self._table_meta(cl)
-            if cl_loc is None or cl_parts != ["rw_timestamp"]:
+            cl_fields = self._table_columns(cl)
+            if cl_fields is None or cl_parts != ["rw_timestamp"]:
                 return False
             # avg groups merge through their sum/count companions;
             # without them (engine restart, post-Spark-path rewrite)
@@ -3337,14 +3433,13 @@ class SparkEngine:
                 self.next_epoch()
                 state.last_epoch = m1
                 return True
-            mv_schema = spark.table(fq).schema
-            cols = [f.name for f in mv_schema.fields]
+            cols = [c for c, _ in mv_fields]
             pa_types: dict[str, "pa.DataType"] = {}
-            for fld in mv_schema.fields:
-                at = self._arrow_type(fld.dataType)
+            for c, ty in mv_fields:
+                at = self._arrow_type(ty)
                 if at is None:
                     return False
-                pa_types[fld.name] = at
+                pa_types[c] = at
             stored: dict[str, list] = {c: [] for c in cols}
             for f in mv_files:
                 t = pq.read_table(f)
@@ -3369,8 +3464,7 @@ class SparkEngine:
             # Build EVERY arrow table before any mutation: a cast
             # overflow here must leave the MV untouched for the Spark
             # path to redo the work.
-            cl_phys = [c for c in spark.table(cl).columns
-                       if c != "rw_timestamp"]
+            cl_phys = [c for c, _ in cl_fields if c != "rw_timestamp"]
             try:
                 mv_tab = pa.table(
                     {c: pa.array(new_rows[c], type=pa_types[c]) for c in cols}
@@ -3393,15 +3487,17 @@ class SparkEngine:
                 })
             except Exception:  # noqa: BLE001 — overflow/coercion: Spark path
                 return False
-            # Capability probe BEFORE any mutation: a no-op SET
-            # LOCATION to the current path. A catalog that refuses the
-            # op (exotic deployments) falls back cleanly here; probing
-            # now means the real swap after the changelog commit below
-            # is near-certain to succeed.
-            try:
-                spark.sql(f"ALTER TABLE {fq} SET LOCATION '{loc_mv}'")
-            except Exception:  # noqa: BLE001 — catalog refused: Spark path
-                return False
+            # Capability probe BEFORE the first mutation of this plan:
+            # a no-op SET LOCATION to the current path. A catalog that
+            # refuses the op (exotic deployments) falls back cleanly
+            # here; once it has accepted, the real swap after the
+            # changelog commit below is near-certain to succeed.
+            if not d.get("set_location_ok"):
+                try:
+                    spark.sql(f"ALTER TABLE {fq} SET LOCATION '{loc_mv}'")
+                except Exception:  # noqa: BLE001 — catalog refused: Spark path
+                    return False
+                d["set_location_ok"] = True
             epoch = self.next_epoch()
             # Same commit order as the Spark refresh paths: changelog
             # epoch FIRST, result swap second. A failure (or crash)
@@ -3429,11 +3525,12 @@ class SparkEngine:
             pq.write_table(
                 mv_tab, os.path.join(new_loc, f"rwfast-{epoch}.parquet")
             )
+            # both ALTERs refresh their table's cached relation
             spark.sql(f"ALTER TABLE {fq} SET LOCATION '{new_loc}'")
-            self._locations.pop(fq, None)
-            spark.catalog.refreshTable(fq)
-            spark.catalog.refreshTable(cl)
-            shutil.rmtree(loc_mv, ignore_errors=True)  # superseded gen
+            self._locations[fq] = (new_loc, parts_mv, mv_fields)
+            # keep the superseded generation for readers planned
+            # before this swap; retire the one before it
+            self._remove_generations(fq, keep=(loc_mv, new_loc))
             state.last_epoch = m1
             if aux_new is not None:
                 state.direct_aux = aux_new
@@ -4032,9 +4129,7 @@ class SparkEngine:
             with self._lock:
                 epoch = self.next_epoch()
                 self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
+                self._swap_in_stage(fq, stage)
         else:
             with self._lock:
                 epoch = self.next_epoch()
@@ -4160,9 +4255,7 @@ class SparkEngine:
         with self._lock:
             epoch = self.next_epoch()
             self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
+            self._swap_in_stage(fq, stage)
         return True
 
     # -- session-window MVs: touched-span recompute ---------------------
@@ -4501,9 +4594,7 @@ class SparkEngine:
         with self._lock:
             epoch = self.next_epoch()
             self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
+            self._swap_in_stage(fq, stage)
         return True
 
     # -- N-way plain-join MVs (no aggregate): signed telescoping delta --
@@ -4997,9 +5088,7 @@ class SparkEngine:
         with self._lock:
             epoch = self.next_epoch()
             self._append_changelog_tagged(fq, tagged, epoch)
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
+            self._swap_in_stage(fq, stage)
         return True
 
     # -- UNION ALL MVs: linear bag-sum delta ----------------------------
@@ -5802,9 +5891,14 @@ class SparkEngine:
 
     def drop_mv(self, name: str, schema_name: str | None = None) -> None:
         fq = self.qualify(name, schema_name)
-        self.mvs.pop(fq, None)
-        self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.changelog_name(fq)}")
+        cl = self.changelog_name(fq)
+        with self._lock:
+            self.mvs.pop(fq, None)
+            self.spark.sql(f"DROP TABLE IF EXISTS {fq}")
+            self.spark.sql(f"DROP TABLE IF EXISTS {cl}")
+            # the DROP removed only the current generation
+            self._remove_generations(fq)
+            self._invalidate_location(fq, cl)
 
     # -- watermarks + EMIT ON WINDOW CLOSE (RW append-only MVs) ------------
 
@@ -6226,9 +6320,7 @@ class SparkEngine:
             epoch = self.next_epoch()
             if any_change:
                 self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
+                self._swap_in_stage(fq, stage)
         if not any_change:
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
         state.last_epoch = m1
@@ -7313,9 +7405,7 @@ class SparkEngine:
             epoch = self.next_epoch()
             if any_change:
                 self._append_changelog_tagged(fq, tagged, epoch)
-                spark.sql(f"DROP TABLE IF EXISTS {fq}")
-                spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-                spark.catalog.refreshTable(fq)
+                self._swap_in_stage(fq, stage)
         if not any_change:
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
         state.last_epoch = m1
@@ -7867,9 +7957,7 @@ class SparkEngine:
                 self._append_changelog_tagged(fq, tagged, epoch)
 
         if any_change:
-            spark.sql(f"DROP TABLE IF EXISTS {fq}")
-            spark.sql(f"ALTER TABLE {stage} RENAME TO {fq}")
-            spark.catalog.refreshTable(fq)
+            self._swap_in_stage(fq, stage)
         else:
             spark.sql(f"DROP TABLE IF EXISTS {stage}")
         if rearm is not None:
@@ -8163,7 +8251,7 @@ class SparkEngine:
         # from) the moved-away location — and the epoch manifest must
         # re-list (truncated epochs leave it; the new dir has no
         # marker, so the (loc, sig) check re-hydrates on first use)
-        self._locations.pop(cl, None)
+        self._invalidate_location(cl)
         self._epoch_cache.pop(cl, None)
         # RENAME on a PARTITIONED managed table moves the data dir but
         # drops the partition metadata — recover it from the directory

@@ -5,6 +5,9 @@ users issue through the reference's SQL pass-through.
 
 from __future__ import annotations
 
+import os
+import re
+
 import pandas as pd
 import pytest
 
@@ -172,21 +175,58 @@ def test_explain_analyze_reports_runtime_metrics(rw):
     rw.execute("DROP TABLE t_cat_ea")
 
 
-def test_alter_mv_rename(rw):
+def test_alter_mv_rename(rw, spark):
+    """Rename and drop with the direct (driver-side) refresh armed:
+    every result equals its recompute, and no superseded generation
+    dir of either name outlives the DROP."""
+    mv_sql = "SELECT k, sum(v) AS s FROM t_cat_mvr GROUP BY k"
+
+    def assert_recomputed(mv):
+        assert sorted(rw.fetch(f"SELECT * FROM {mv}")) == sorted(
+            rw.fetch(mv_sql)
+        )
+
+    def generation_dirs():
+        db_dir = os.path.join(
+            re.sub(r"^file:", "", spark.conf.get("spark.sql.warehouse.dir")),
+            "public.db",
+        )
+        return [d for d in os.listdir(db_dir)
+                if d.startswith("mv_cat_r") and "__rwgen_" in d]
+
     rw.execute("DROP TABLE IF EXISTS t_cat_mvr")
     rw.insert(pd.DataFrame({"k": [1, 1, 2], "v": [1.0, 2.0, 3.0]}),
               table_name="t_cat_mvr", force_flush=True)
     rw.execute("DROP MATERIALIZED VIEW IF EXISTS mv_cat_r1")
-    rw.execute("CREATE MATERIALIZED VIEW mv_cat_r1 AS "
-               "SELECT k, sum(v) AS s FROM t_cat_mvr GROUP BY k")
+    rw.execute(f"CREATE MATERIALIZED VIEW mv_cat_r1 AS {mv_sql}")
+    assert rw.engine.mvs["public.mv_cat_r1"].inc_direct is not None
+    for v in (1.0, 2.0):  # two direct refreshes: one generation retained
+        rw.insert_row("t_cat_mvr", force_flush=True, k=3, v=v)
+    assert generation_dirs()
     rw.execute("ALTER MATERIALIZED VIEW mv_cat_r1 RENAME TO mv_cat_r2")
     assert not rw.check_exist("mv_cat_r1")
-    assert sorted(rw.fetch("SELECT * FROM mv_cat_r2")) == [(1, 3.0), (2, 3.0)]
-    # the renamed MV still refreshes on flush
+    assert sorted(rw.fetch("SELECT * FROM mv_cat_r2")) == [
+        (1, 3.0), (2, 3.0), (3, 3.0)
+    ]
+    # the renamed MV still refreshes on flush, on the direct path too
     rw.insert(pd.DataFrame({"k": [2], "v": [7.0]}),
               table_name="t_cat_mvr", force_flush=True)
-    assert sorted(rw.fetch("SELECT * FROM mv_cat_r2")) == [(1, 3.0), (2, 10.0)]
+    assert sorted(rw.fetch("SELECT * FROM mv_cat_r2")) == [
+        (1, 3.0), (2, 10.0), (3, 3.0)
+    ]
+    rw.insert_row("t_cat_mvr", force_flush=True, k=1, v=4.0)
+    assert rw.engine.mvs["public.mv_cat_r2"].inc_direct is not None
+    assert_recomputed("mv_cat_r2")
     rw.execute("DROP MATERIALIZED VIEW mv_cat_r2")
+    assert generation_dirs() == []
+    # a new MV under the old name starts clean and refreshes directly
+    rw.execute(f"CREATE MATERIALIZED VIEW mv_cat_r1 AS {mv_sql}")
+    for v in (5.0, 6.0):
+        rw.insert_row("t_cat_mvr", force_flush=True, k=4, v=v)
+    assert rw.engine.mvs["public.mv_cat_r1"].inc_direct is not None
+    assert_recomputed("mv_cat_r1")
+    rw.execute("DROP MATERIALIZED VIEW mv_cat_r1")
+    assert generation_dirs() == []
     rw.execute("DROP TABLE t_cat_mvr")
 
 

@@ -14,10 +14,6 @@ import uuid
 
 import pandas as pd
 import pytest
-# Long-running sweep: excluded from the default fast lane (pyproject addopts
-# -m "not slow"); the full suite runs it via -m "slow or not slow".
-pytestmark = pytest.mark.slow
-
 
 from risingwave_py_spark.core import RisingWaveConnection
 from risingwave_py_spark.engine import SparkEngine
@@ -49,6 +45,7 @@ def _no_jobs(spark):
     return Ctx()
 
 
+@pytest.mark.slow
 def test_global_agg_runs_zero_jobs_and_matches_recompute(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.ev (k BIGINT, v DOUBLE)")
@@ -74,6 +71,7 @@ def test_global_agg_runs_zero_jobs_and_matches_recompute(spark, conn):
     assert st.inc_direct is not None
 
 
+@pytest.mark.slow
 def test_grouped_agg_direct_matches_recompute_bit_exact(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.t (p STRING, v BIGINT)")
@@ -130,6 +128,7 @@ def test_retraction_falls_back_and_stays_correct(spark, conn):
     assert sorted(c.fetch(f"SELECT * FROM {s}.m")) == [("a", 10), ("b", 5)]
 
 
+@pytest.mark.slow
 def test_large_delta_falls_back_then_rearms(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.ev (k BIGINT, v BIGINT)")
@@ -154,6 +153,7 @@ def test_large_delta_falls_back_then_rearms(spark, conn):
     ]
 
 
+@pytest.mark.slow
 def test_engine_restart_rearms_without_double_merge(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.ev (k BIGINT, v BIGINT)")
@@ -177,6 +177,7 @@ def test_engine_restart_rearms_without_double_merge(spark, conn):
     assert c2.fetch(f"SELECT n, sm FROM {s}.agg") == [(5, 113)]
 
 
+@pytest.mark.slow
 def test_nan_delta_falls_back_not_corrupts(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.ev (k BIGINT, v DOUBLE)")
@@ -193,6 +194,7 @@ def test_nan_delta_falls_back_not_corrupts(spark, conn):
     assert row[1] != row[1]  # NaN is the max
 
 
+@pytest.mark.slow
 def test_decimal_sums_stay_exact(spark, conn):
     import decimal
 
@@ -244,6 +246,7 @@ def test_direct_result_survives_spark_path_interleaving(spark, conn):
     assert got == want == [("a", 106, 3), ("c", 9, 1)]
 
 
+@pytest.mark.slow
 def test_unconsumed_vacuum_disarms_then_rearms_direct(spark, conn):
     """Vacuuming epochs the direct plan has not folded yet must disarm
     it (the delta suffix is gone); the SAME flush falls back to
@@ -280,6 +283,7 @@ def test_unconsumed_vacuum_disarms_then_rearms_direct(spark, conn):
     assert jobs.clean
     assert c.fetch(f"SELECT n, sm FROM {s}.agg") == [(3, 6)]
 
+@pytest.mark.slow
 def test_avg_global_zero_jobs_matches_recompute(spark, conn):
     """avg() decomposes into the sum/count companions (VERDICT r9 #1):
     the reference's canonical demo aggregate shape must run the whole
@@ -309,6 +313,7 @@ def test_avg_global_zero_jobs_matches_recompute(spark, conn):
     assert st.inc_direct is not None
 
 
+@pytest.mark.slow
 def test_avg_where_grouped_direct(spark, conn):
     """Grouped avg with a simple WHERE: the Python fold filters delta
     rows with Spark's semantics (NULLs drop, type guards demote)."""
@@ -337,6 +342,7 @@ def test_avg_where_grouped_direct(spark, conn):
     assert st.inc_direct is not None
 
 
+@pytest.mark.slow
 def test_tumble_round_avg_demo_shape_runs_direct(spark, conn):
     """The reference's flagship demo MV (demo.py:98-100): tumble TVF +
     round(avg()) + GROUP BY window/symbol must take the zero-job path,
@@ -382,6 +388,7 @@ def test_tumble_round_avg_demo_shape_runs_direct(spark, conn):
     assert st.inc_direct is not None
 
 
+@pytest.mark.slow
 def test_avg_round_half_up_matches_spark(spark, conn):
     """round() finalization must use Spark's HALF_UP-on-shortest-repr
     semantics, not Python's banker's rounding: avg(2,3)=2.5 -> 3.0."""
@@ -400,6 +407,7 @@ def test_avg_round_half_up_matches_spark(spark, conn):
     assert got == want == [(3.0,)]
 
 
+@pytest.mark.slow
 def test_avg_round_hides_change_but_companions_advance(spark, conn):
     """A delta that moves the raw avg but not the ROUNDED value must
     emit nothing — yet the sum/count companions must still advance so
@@ -429,6 +437,7 @@ def test_avg_round_hides_change_but_companions_advance(spark, conn):
     assert got == want == [(17.0,)]
 
 
+@pytest.mark.slow
 def test_avg_large_delta_falls_back_then_rearms_with_companions(spark, conn):
     c, eng, s = conn
     c.execute(f"CREATE TABLE {s}.ev (k BIGINT, v DOUBLE)")
@@ -451,6 +460,7 @@ def test_avg_large_delta_falls_back_then_rearms_with_companions(spark, conn):
     assert got == want
 
 
+@pytest.mark.slow
 def test_where_string_number_coercion_demotes_not_corrupts(spark, conn):
     """WHERE p > 5 over a STRING column: Spark coerces, Python must
     not guess — the fold demotes to the Spark path and stays exact."""
@@ -469,6 +479,7 @@ def test_where_string_number_coercion_demotes_not_corrupts(spark, conn):
     assert got == want == [(1, 1)]
 
 
+@pytest.mark.slow
 def test_avg_companions_refresh_after_inc_path_interleave(spark, conn):
     """A grouped avg MV co-arms the direct path (sum/count companions
     in memory) AND the recompute-only inc path. An inc refresh (big
@@ -517,6 +528,7 @@ def test_avg_companions_refresh_after_inc_path_interleave(spark, conn):
     assert got == want
 
 
+@pytest.mark.slow
 def test_tumble_direct_window_boundary_exact(spark, conn):
     """A timestamp exactly on a window edge must land in the NEXT
     window (floor semantics), bit-identical to Spark's rewrite — the
@@ -550,3 +562,86 @@ def test_tumble_direct_window_boundary_exact(spark, conn):
     ))
     assert got == want
     assert [r[-1] for r in got] == [2, 1]
+
+
+def test_planned_read_survives_one_direct_refresh(spark, conn):
+    """A SELECT planned before a direct refresh still reads the
+    generation it planned against: the refresh that supersedes a
+    generation keeps it, and only the next one deletes it."""
+    c, eng, s = conn
+    c.execute(f"CREATE TABLE {s}.t (p STRING, v BIGINT)")
+    c.execute(
+        f"CREATE MATERIALIZED VIEW {s}.m AS "
+        f"SELECT p, sum(v) AS total FROM {s}.t GROUP BY p"
+    )
+    assert eng.mvs[f"{s}.m"].inc_direct is not None
+    c.insert_row("t", schema_name=s, force_flush=True, p="a", v=1)
+    df = spark.table(f"{s}.m")
+    df._jdf.queryExecution().executedPlan()  # file listing fixed here
+    c.insert_row("t", schema_name=s, force_flush=True, p="a", v=2)
+    assert [tuple(r) for r in df.collect()] == [("a", 1)]
+    assert c.fetch(f"SELECT * FROM {s}.m") == [("a", 3)]
+
+
+class _CatalogCalls:
+    """Records the catalog round trips the engine makes: every
+    ``spark.sql`` statement, ``spark.table`` lookup and
+    ``spark.catalog.refreshTable``/``tableExists`` call."""
+
+    def __init__(self, spark, monkeypatch):
+        self.calls: list[tuple[str, str]] = []
+        for obj, name in ((spark, "sql"), (spark, "table"),
+                          (spark.catalog, "refreshTable"),
+                          (spark.catalog, "tableExists")):
+            monkeypatch.setattr(obj, name, self._wrap(name, getattr(obj, name)))
+
+    def _wrap(self, name, fn):
+        def call(arg, *a, **kw):
+            self.calls.append((name, " ".join(str(arg).split())))
+            return fn(arg, *a, **kw)
+        return call
+
+
+def test_steady_state_tick_issues_only_publishing_statements(
+    spark, conn, monkeypatch
+):
+    """One steady-state insert_row(force_flush=True) into a table with
+    one direct grouped-agg MV issues exactly the catalog statements
+    that publish: ADD PARTITION on the base changelog (ingest), ADD
+    PARTITION on the MV changelog plus SET LOCATION on the MV
+    (refresh), and the base table's refreshTable for the file the
+    ingest wrote. No DESC FORMATTED, no schema lookups, no existence
+    probes, no changelog refreshTable, no Spark jobs."""
+    c, eng, s = conn
+    c.execute(f"CREATE TABLE {s}.t (p STRING, v BIGINT)")
+    c.execute(
+        f"CREATE MATERIALIZED VIEW {s}.m AS "
+        f"SELECT p, sum(v) AS total, count(*) AS n FROM {s}.t GROUP BY p"
+    )
+    assert eng.mvs[f"{s}.m"].inc_direct is not None
+    for v in (1, 2):  # first publish fills the caches and probes
+        c.insert_row("t", schema_name=s, force_flush=True, p="a", v=v)
+    base_cl = eng.changelog_name(f"{s}.t")
+    mv_cl = eng.changelog_name(f"{s}.m")
+    rec = _CatalogCalls(spark, monkeypatch)
+    with _no_jobs(spark) as jobs:
+        c.insert_row("t", schema_name=s, force_flush=True, p="b", v=5)
+    monkeypatch.undo()
+    assert jobs.clean
+    shapes = sorted(
+        (name, stmt.split(" PARTITION")[0].split(" SET LOCATION")[0])
+        for name, stmt in rec.calls
+    )
+    assert shapes == sorted([
+        ("sql", f"ALTER TABLE {base_cl} ADD IF NOT EXISTS"),
+        ("sql", f"ALTER TABLE {mv_cl} ADD IF NOT EXISTS"),
+        ("sql", f"ALTER TABLE {s}.m"),
+        ("refreshTable", f"{s}.t"),
+    ]), rec.calls
+    assert sum("SET LOCATION" in stmt for _, stmt in rec.calls) == 1
+    assert eng.mvs[f"{s}.m"].inc_direct is not None
+    got = sorted(c.fetch(f"SELECT * FROM {s}.m"))
+    want = sorted(c.fetch(
+        f"SELECT p, sum(v) AS total, count(*) AS n FROM {s}.t GROUP BY p"
+    ))
+    assert got == want == [("a", 3, 2), ("b", 5, 1)]
